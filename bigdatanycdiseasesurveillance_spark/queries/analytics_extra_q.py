@@ -907,7 +907,6 @@ def _hw_oracle() -> str:
     "ts_holt_winters",
     oracle=_hw_oracle(),
     tags=("timeseries", "forecast", "seasonal", "pandas-udf", "recursive", "M10"),
-    bench=True,
 )
 def ts_holt_winters(spark, sf_dir):
     """Holt-Winters ADDITIVE triple smoothing with period-7 seasonality

@@ -22,7 +22,6 @@ from ..tables import table
         GROUP BY 1, 2
     """,
     tags=("agg", "A1", "A2"),
-    bench=True,
 )
 def agg_daily_type_counts(spark, sf_dir):
     """A1/A2: daily per-type counts + value sums (the reference's

@@ -161,7 +161,6 @@ def join_active_customers_semi(spark, sf_dir):
           ON p.user_id = c.user_id AND p.ts >= c.ts
     """,
     tags=("join", "asof"),
-    bench=True,
 )
 def join_asof_purchase_click(spark, sf_dir):
     """As-of join: each purchase matched to the user's latest click at or

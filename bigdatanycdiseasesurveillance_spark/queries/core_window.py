@@ -95,7 +95,6 @@ def win_rolling_7d(spark, sf_dir):
         FROM hist
     """,
     tags=("window", "W3", "M13", "M12"),
-    bench=True,
 )
 def win_anomaly_zscore(spark, sf_dir):
     """W3/M13: the reference's anomaly detector — expanding-window

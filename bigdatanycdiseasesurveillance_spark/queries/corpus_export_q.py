@@ -66,7 +66,6 @@ _BOILER_K = 3  # chunk is boilerplate if it appears in >= K distinct docs
         FROM flagged GROUP BY doc_id
     """,
     tags=("text", "dedup", "boilerplate", "llm-prep"),
-    bench=True,
 )
 def txt_chunk_boilerplate(spark, sf_dir):
     """CCNet-style boilerplate removal: fixed 4-word chunks that recur in
@@ -168,7 +167,6 @@ _RANK_STRIDE = 500  # emit every Nth global rank as the witness set
         FROM ranked WHERE global_rank % {_RANK_STRIDE} = 0
     """,
     tags=("window", "global-rank", "scale-primitive"),
-    bench=True,
 )
 def win_global_rank_ranged(spark, sf_dir):
     """Distributed global row numbering — the scale rewrite of

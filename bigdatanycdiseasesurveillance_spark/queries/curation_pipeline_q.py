@@ -102,7 +102,6 @@ def _dev_sql(salt: str) -> str:
                CAST(SUM(ntok) AS BIGINT) FROM s5
     """,
     tags=("curation", "pipeline", "training-data"),
-    bench=True,
 )
 def cur_full_pipeline(spark, sf_dir):
     """End-to-end curation: dedup-representative -> quality gate

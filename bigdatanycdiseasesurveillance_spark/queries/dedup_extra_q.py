@@ -876,7 +876,7 @@ def _gold_scratch_dir(sf_dir: str, kind: str) -> str:
 
     Cross-process safety (r8 advisor finding): the shared dir is
     guarded by a non-blocking flock held for the process lifetime —
-    without it, a gate_one re-run concurrent with an audit would rmtree
+    without it, a targeted gate re-run concurrent with an audit would rmtree
     the audit's mid-run gold versions. If another process holds the
     lock, fall back to a pid-suffixed dir cleaned up at exit (bounded
     litter: only under actual concurrency, and only until exit)."""

@@ -53,7 +53,6 @@ def dedup_exact_hash(spark, sf_dir):
         SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.7
     """,
     tags=("dedup", "M2"),
-    bench=True,
 )
 def dedup_jaccard_pairs(spark, sf_dir):
     """M2-class word-Jaccard near-dup pairs, blocked by (source, length
@@ -452,7 +451,6 @@ def dedup_embedding_cosine(spark, sf_dir):
         GROUP BY gl.comp HAVING SUM(gb.c) > 1
     """,
     tags=("dedup", "M2", "groups"),
-    bench=True,
 )
 def dedup_duplicate_groups(spark, sf_dir):
     """Near-dup GROUPS: blocked Jaccard pairs -> iterative min-label

@@ -134,7 +134,6 @@ def _records(spark, sf_dir):
         FROM j
     """,
     tags=("domain", "J2", "J3", "J4", "J5", "J6", "J7"),
-    bench=True,
 )
 def loc_fallback_resolution(spark, sf_dir):
     """J2-J7 in one cascade: subreddit map, point-in-bbox range join,

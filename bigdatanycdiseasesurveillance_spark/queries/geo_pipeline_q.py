@@ -509,7 +509,6 @@ def _cellgrid_pipeline_oracle() -> str:
     "cluster_geo_pipeline_cellgrid",
     oracle=_cellgrid_pipeline_oracle(),
     tags=("cluster", "geo", "M7", "M9", "J3", "scale-path", "composed"),
-    bench=True,
 )
 def cluster_geo_pipeline_cellgrid(spark, sf_dir):
     """The composed flagship on the PRODUCTION scale path: seeded

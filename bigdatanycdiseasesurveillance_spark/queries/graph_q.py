@@ -277,7 +277,6 @@ TREE_FAST_PATH_NODES = 200_000
         FROM walk GROUP BY node
     """,
     tags=("graph", "bfs", "iterative"),
-    bench=True,
 )
 def graph_bfs_hops(spark, sf_dir):
     """BFS hop levels from nation 0 over the top-3-strongest-partner

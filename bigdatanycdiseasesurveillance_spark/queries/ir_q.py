@@ -77,7 +77,6 @@ _WIN_S = 6 * 3600
         ORDER BY bm25 DESC, doc_id LIMIT 10
     """,
     tags=("search", "bm25", "ir"),
-    bench=True,
 )
 def search_bm25_topk(spark, sf_dir):
     """Lexical ranked retrieval: Okapi BM25 (k1=1.2, b=0.75) top-10 for

@@ -355,7 +355,6 @@ def _semdedup_oracle() -> str:
     "dedup_semdedup_profile",
     oracle=_semdedup_oracle(),
     tags=("dedup", "semdedup", "cluster", "M3", "M8", "composed", "llm-prep"),
-    bench=True,
 )
 def dedup_semdedup_profile(spark, sf_dir):
     """SemDeDup (Abbas et al.'s cluster-then-dedup recipe, the

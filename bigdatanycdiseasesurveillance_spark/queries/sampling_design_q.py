@@ -59,7 +59,6 @@ _W_SCALE = 1_000_000  # weight quantization: floor(w * 1e6) -> BIGINT
         FROM r
     """,
     tags=("sampling", "design", "training-data"),
-    bench=True,
 )
 def samp_neyman_allocation(spark, sf_dir):
     """Neyman-optimal stratified-sample allocation over sources:
@@ -163,7 +162,6 @@ _SENT_SPLIT = r"\.\s+"
         FROM d JOIN q USING (lang)
     """,
     tags=("text", "structure", "training-data"),
-    bench=True,
 )
 def txt_sentence_segmentation_profile(spark, sf_dir):
     """Regex sentence-segmentation profile per language: sentence
@@ -1160,7 +1158,6 @@ _ZIPF_BUCKETS = 32
         FROM top JOIN tot ON top.lang = tot.lang
     """,
     tags=("text", "tokenizer", "training-data"),
-    bench=True,
 )
 def txt_zipf_profile(spark, sf_dir):
     """Zipf head profile per language: the top-20 tokens with exact

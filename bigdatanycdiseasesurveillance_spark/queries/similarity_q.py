@@ -43,7 +43,6 @@ def _query_vec(spark, sf_dir, vec_id: int = 0) -> list[float]:
         LIMIT 10
     """,
     tags=("ann", "M5"),
-    bench=True,
 )
 def ann_cosine_topk(spark, sf_dir):
     """M5: exact brute-force cosine top-10 for a query vector (vec 0) —
@@ -77,7 +76,6 @@ def ann_cosine_topk(spark, sf_dir):
         ) WHERE rank <= 3
     """,
     tags=("ann", "knn"),
-    bench=True,
 )
 def ann_knn_per_label(spark, sf_dir):
     """All-vectors kNN within blocks (IVF-cell-restricted knn-join): the
@@ -116,7 +114,6 @@ def ann_knn_per_label(spark, sf_dir):
         LIMIT 10
     """,
     tags=("ann", "ivf"),
-    bench=True,
 )
 def ann_ivf_search(spark, sf_dir):
     """IVF search: rank cells by centroid similarity, scan only nprobe=2
@@ -195,7 +192,6 @@ def _emb_oracle_cte(dim: int = 64) -> str:
         FROM vec GROUP BY lang
     """,
     tags=("embedding", "M4", "oracle-replayable"),
-    bench=True,
 )
 def emb_encode_profile(spark, sf_dir):
     """M4: mapInPandas embedding generation over documents (executor-

@@ -162,7 +162,6 @@ def _e2e_oracle() -> str:
     "stream_surveillance_e2e",
     oracle=_e2e_oracle(),
     tags=("streaming", "composed", "relevance", "location", "flagship"),
-    bench=True,
 )
 def stream_surveillance_e2e(spark, sf_dir):
     """The reference's full consumer chain (relevance -> location ->

@@ -126,7 +126,6 @@ _NORM_SQL = (
             PARTITION BY doc_id ORDER BY score DESC, profile_lang) = 1
     """,
     tags=("text", "langid"),
-    bench=True,
 )
 def txt_langid_trigram(spark, sf_dir):
     """Language-ID: character-trigram profiles learned from the labeled
@@ -166,7 +165,6 @@ _HV = "[" + ", ".join(f"'{k}'" for k in HAZARD_VOCAB) + "]"
         FROM m
     """,
     tags=("relevance", "U1", "P5"),
-    bench=True,
 )
 def rel_keyword_extraction(spark, sf_dir):
     """U1/P5: the reference's relevance UDF as pure column expressions

@@ -55,7 +55,6 @@ def _dec(name: str):
         GROUP BY 1, 2
     """,
     tags=("tpch", "agg"),
-    bench=True,
 )
 def tpch_q1_pricing_summary(spark, sf_dir):
     """TPC-H Q1 shape: wide partial-aggregation scan. The shipdate filter
@@ -109,7 +108,6 @@ def tpch_q1_pricing_summary(spark, sf_dir):
         LIMIT 10
     """,
     tags=("tpch", "join"),
-    bench=True,
 )
 def tpch_q3_shipping_priority(spark, sf_dir):
     """TPC-H Q3 shape: selective filters pushed below a 3-way join, then
@@ -157,7 +155,6 @@ def tpch_q3_shipping_priority(spark, sf_dir):
         GROUP BY 1
     """,
     tags=("tpch", "join"),
-    bench=True,
 )
 def tpch_q5_regional_revenue(spark, sf_dir):
     """TPC-H Q5 shape: 6-way join with region filter. nation/region/

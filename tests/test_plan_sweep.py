@@ -185,6 +185,14 @@ def test_corrupt_budget_file_is_a_violation_not_an_abort(spark, sf_dir):
     assert any("unreadable" in v for v in violations), violations
 
 
+def test_all_specs_is_registration_order():
+    """all_specs() is the registry as registered: no artifact-driven
+    reordering."""
+    from bigdatanycdiseasesurveillance_spark import registry
+
+    assert list(all_specs()) == list(registry._REGISTRY)
+
+
 def test_registry_plan_invariants(spark, sf_dir):
     """Sweep all ~230 registry plans. Any cartesian, any unvetted BNLJ,
     any BatchEvalPython, or any build failure is a violation; stale

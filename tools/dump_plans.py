@@ -1,15 +1,17 @@
 #!/usr/bin/env python3
-"""Dump `.explain("formatted")` for named queries into plans/r14/.
+"""Dump `.explain("formatted")` for named queries into DIR.
 
-Usage: python tools/dump_plans_r14.py SUFFIX name1 name2 ...
-       (SUFFIX is `before` or `after`; writes plans/r14/<name>_<SUFFIX>.txt)
+Usage: python tools/dump_plans.py --out DIR SUFFIX name1 name2 ...
+       (SUFFIX is `before` or `after`; writes DIR/<name>_<SUFFIX>.txt,
+       e.g. --out plans/r14 as in the committed round plans)
 
 Plans are captured at sf0.001 (plan shapes are scale-invariant; the
-round deliverable is the shape diff, not row counts).
+deliverable is the shape diff, not row counts).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -20,29 +22,27 @@ SF_DIR = os.environ.get("SPARK_GRAFT_PLAN_SF", "/root/testdata/sf0.001")
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
-    if suffix not in ("before", "after") or not names:
-        sys.exit(__doc__)
-    out_dir = os.environ.get(
-        "SPARK_GRAFT_PLAN_OUT", os.path.join(REPO_DIR, "plans", "r14")
-    )
-    os.makedirs(out_dir, exist_ok=True)
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", required=True, help="output directory")
+    ap.add_argument("suffix", choices=("before", "after"))
+    ap.add_argument("names", nargs="+")
+    args = ap.parse_args()
+    os.makedirs(args.out, exist_ok=True)
 
     from bigdatanycdiseasesurveillance_spark.registry import all_specs
     from bigdatanycdiseasesurveillance_spark.session import get_spark
 
-    spark = get_spark("bdnds-plans-r14")
+    spark = get_spark("bdnds-plans")
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_specs()
-    for name in names:
+    for name in args.names:
         df = specs[name].fn(spark, SF_DIR)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
             )
         )
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        path = os.path.join(args.out, f"{name}_{args.suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")

@@ -1,7 +1,11 @@
 """Simulate the driver's correctness gate: run every queries() entry and
 compare to oracle_sql() in DuckDB.
 
-Usage:  cd /tmp && python /root/repo/tools/gate_sim.py [sf_dir]
+Usage:  cd /tmp && python REPO/tools/gate_sim.py [sf_dir [name ...]]
+
+Query names after the SF dir restrict the run to those entries (a
+targeted gate while iterating on a few queries). SPARK_GRAFT_CPUS and
+SPARK_GRAFT_DRIVER_MEM size the session (defaults local[8], 4g).
 
 MUST run from OUTSIDE the repo (e.g. /tmp): the driver's executors do
 not have the repo on sys.path, so pandas-UDF closure-pickling bugs only
@@ -9,7 +13,7 @@ reproduce in that configuration. The script refuses to run from the
 repo root for that reason.
 """
 import os
-import sys, math, datetime
+import sys
 
 sys.path.insert(0, "/root/repo")
 import duckdb
@@ -23,27 +27,7 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
-
-def norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return None
-        r = round(v, 6)
-        return 0.0 if r == 0 else r  # collapse IEEE -0.0 (repr-sort hazard)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    if isinstance(v, list):
-        return tuple(norm_cell(x) for x in v)
-    return v
-
-
-def norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(norm_cell(r[i]) for i in order) for r in rows), key=repr
-    )
+from gate_sim_lib import norm_rows  # noqa: E402  (shared with scale_audit.py)
 
 
 def main():

@@ -1,4 +1,4 @@
-"""Row normalization shared by gate_sim.py and gate_one.py (mirrors the
+"""Row normalization shared by gate_sim.py and scale_audit.py (mirrors the
 driver's order-insensitive compare)."""
 import datetime
 import math

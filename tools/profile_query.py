@@ -1,23 +1,24 @@
 #!/usr/bin/env python3
-"""Profile one registry query: plan-build time vs execution time, plus a
-per-Spark-job wall-time table pulled from the live UI REST API (guide
-§1.1 "empirical" — where does the time actually go). Usage:
+"""Profile one registry query: plan-build time vs execution time, plus
+the Spark counters of each rep's jobs (where does the time actually
+go). Usage:
 
     python tools/profile_query.py <query> [reps] [sf_dir]
 
-Prints, per rep: build_s (spec.fn call = driver-side plan construction,
-including any control-plane collects the query performs while building)
-and exec_s (noop sink). Then the job table of the LAST rep: job id,
-description, duration, stage count, task count.
+Each rep runs under its own job group. Per rep it prints build_s
+(spec.fn call = driver-side plan construction, including any
+control-plane collects the query performs while building), exec_s
+(noop sink), and the counters the in-process status store holds for
+that group (perfbench/probes.py:SparkCounters, works with the UI off):
+jobs, stages, tasks, executor run/CPU seconds, shuffle read/write
+bytes, spill bytes and summed job wall time.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_DIR)
@@ -32,73 +33,40 @@ def main() -> None:
 
     from bigdatanycdiseasesurveillance_spark.registry import all_specs
     from bigdatanycdiseasesurveillance_spark.session import get_spark
+    from perfbench.probes import SparkCounters
 
     spark = get_spark("bdnds-profile")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     spec = all_specs()[name]
+    counters = SparkCounters(spark)
 
     # Warm-up: JVM/codegen + python worker pool
     spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    spark.range(spark.sparkContext.defaultParallelism).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    spark.range(sc.defaultParallelism).repartition(sc.defaultParallelism).mapInPandas(
+        lambda it: it, "id long"
+    ).write.format("noop").mode("overwrite").save()
 
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-
-    def jobs_after(first_job: int):
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/jobs?status=succeeded"
-        ) as r:
-            js = json.load(r)
-        return sorted(
-            (j for j in js if j["jobId"] >= first_job), key=lambda j: j["jobId"]
-        )
-
-    def last_job_id() -> int:
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/jobs"
-        ) as r:
-            js = json.load(r)
-        return max((j["jobId"] for j in js), default=-1)
-
-    marker = -1
     for rep in range(reps):
-        marker = last_job_id() + 1
+        group = f"profile-{name}-{rep}"
+        sc.setJobGroup(group, name)
         t0 = time.perf_counter()
         df = spec.fn(spark, sf_dir)
         t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
+        c = counters.read([group])
         print(
-            f"rep {rep}: build={t1 - t0:.3f}s exec={t2 - t1:.3f}s "
-            f"total={t2 - t0:.3f}s"
+            f"rep {rep}: build_s={t1 - t0:.3f} exec_s={t2 - t1:.3f} "
+            f"jobs={c['jobs']} stages={c['stages']} tasks={c['tasks']} "
+            f"executor_run_s={c['executor_run_s']:.3f} "
+            f"executor_cpu_s={c['executor_cpu_s']:.3f} "
+            f"shuffle_read_bytes={c['shuffle_read_bytes']} "
+            f"shuffle_write_bytes={c['shuffle_write_bytes']} "
+            f"spill_bytes={c['spill_bytes']} job_wall_s={c['job_wall_s']:.3f}",
+            flush=True,
         )
-
-    print("\njobs of last rep:")
-    total = 0.0
-    for j in jobs_after(marker):
-        dur = 0.0
-        if j.get("completionTime") and j.get("submissionTime"):
-            from datetime import datetime
-
-            # [:23] keeps "YYYY-MM-DDTHH:MM:SS.mmm" and drops the GMT
-            # suffix — durations are differences, so the zone cancels
-            try:
-                st = datetime.strptime(j["submissionTime"][:23], "%Y-%m-%dT%H:%M:%S.%f")
-                en = datetime.strptime(j["completionTime"][:23], "%Y-%m-%dT%H:%M:%S.%f")
-                dur = (en - st).total_seconds()
-            except Exception:
-                pass
-        total += dur
-        desc = (j.get("description") or j.get("name") or "")[:90]
-        print(
-            f"  job {j['jobId']:4d} {dur:7.3f}s stages={len(j.get('stageIds', []))}"
-            f" tasks={j.get('numTasks', 0):5d}  {desc}"
-        )
-    print(f"  sum of job durations: {total:.3f}s")
+    spark.stop()
 
 
 if __name__ == "__main__":
