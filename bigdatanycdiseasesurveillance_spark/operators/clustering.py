@@ -22,26 +22,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Small-corpus fast-path cap for the Lloyd kernels: at or under this many
-# points the whole fixed-iteration loop runs on the driver off ONE capped
-# Arrow collect (<= cap x (d+1) doubles — ~27 MB at d=16, the same
-# bounded-driver-materialization class as dedup.SMALL_GRAPH_EDGES). Above
-# the cap the distributed loop runs exactly as before, so the 100 TB
-# shape is unchanged. Why: each distributed iteration costs one 2-stage
-# k-row aggregate job + a collect round trip (~160 ms of pure control
-# plane at any corpus size; measured r13 — ~1.3 s of
-# dedup_semdedup_profile's warm time was this loop's scheduling, not
-# compute).
-SMALL_KMEANS_POINTS = 200_000
+from . import bounded
 
-# Hard caps on the bounded-control-plane driver collects (r13 verdict
-# directive #2): the eps-grid invariant bounds cells at geography/eps^2
-# (a few hundred for every in-repo caller at ANY corpus size), so these
-# caps are pure contract enforcement — orders of magnitude of headroom,
-# never reachable without a caller violating the invariant, and a loud
-# ValueError beats an unbounded driver materialization.
+# Hard cap on cellgrid_assign's bounded-control-plane driver collect
+# (r13 verdict directive #2): the eps-grid invariant bounds cells at
+# geography/eps^2 (a few hundred for every in-repo caller at ANY corpus
+# size), so the cap is pure contract enforcement — orders of magnitude
+# of headroom, never reachable without a caller violating the
+# invariant, and a loud ValueError beats an unbounded driver
+# materialization.
 BOUNDED_CELLS_CAP = 500_000
-BOUNDED_CC_EDGES = 2_000_000  # <= 9 x cells + self-edges
 
 
 def _round6_spark(x: float) -> float:
@@ -113,15 +103,20 @@ def _driver_lloyd(pids, cols, k: int, iters: int):
 
 
 def _lloyd_head(pts: DataFrame, dim_names: list[str]):
-    """One capped Arrow action serving as both the size probe and the
-    point fetch (the connected_components r13 device). Returns
-    (pids, [dim arrays...]) when the corpus is at or under
-    SMALL_KMEANS_POINTS and clean (non-null), else None — callers then
-    run the distributed loop unchanged. Empty or null-bearing frames
-    also fall through so degenerate behavior stays byte-identical to
-    the previous code path."""
-    head = pts.limit(SMALL_KMEANS_POINTS + 1).toArrow()
-    if not (0 < head.num_rows <= SMALL_KMEANS_POINTS):
+    """The Lloyd kernels' small-corpus fast path: ONE capped Arrow
+    collect through bounded.driver_head (operators/bounded.py; <= cap x
+    (d+1) doubles — ~27 MB at d=16). Returns (pids, [dim arrays...])
+    when the corpus is at or under bounded.DRIVER_ROWS and clean
+    (non-null), else None — callers then run the distributed loop
+    unchanged, so the 100 TB shape is unchanged. Empty or null-bearing
+    frames also fall through so degenerate behavior stays byte-identical
+    to the distributed code path. Why: each distributed iteration costs
+    one 2-stage k-row aggregate job + a collect round trip (~160 ms of
+    pure control plane at any corpus size; measured r13 — ~1.3 s of
+    dedup_semdedup_profile's warm time was this loop's scheduling, not
+    compute)."""
+    head = bounded.driver_head(pts)
+    if head is None or head.num_rows == 0:
         return None
     if any(head.column(c).null_count for c in ("pid", *dim_names)):
         return None
@@ -204,7 +199,7 @@ def lloyd_kmeans_2d(
     centroid rows are collected per iteration. Returns
     (id, cluster_id).
 
-    Small-corpus fast path (r14): at or under SMALL_KMEANS_POINTS the
+    Small-corpus fast path (r14): at or under bounded.DRIVER_ROWS the
     whole loop runs driver-side off one capped Arrow collect
     (_driver_lloyd — bit-compatible arithmetic, see there); above the
     cap the distributed loop below runs exactly as before."""
@@ -428,75 +423,6 @@ def cluster_profiles(assigned: DataFrame, points: DataFrame, id_col: str = "vec_
     )
 
 
-def bounded_cc_labels(
-    edges: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
-    """Connected components for BOUNDED control-plane graphs — graphs
-    whose node count is corpus-size-INDEPENDENT by construction (the
-    eps-grid cell graph: cells <= geography/eps^2, a few hundred at any
-    corpus size). Collects the edge list ONCE (O(cells x 9) rows — the
-    same bounded-control-plane class as the CC convergence probes and
-    the k-means centroid collects), labels with a driver union-find,
-    and returns (doc_id, canonical_id) as a LocalRelation, with
-    canonical_id = min node id of the component — bit-identical to
-    operators.dedup.connected_components on the same edges.
-
-    Why not the distributed loop here: per materialization it costs
-    2-3 jobs (propagate + probe) regardless of graph size; on a
-    ~100-node graph that is pure scheduler overhead (measured r13:
-    ~2s of the cellgrid flagship's 3.5s warm time was CC control
-    plane). Corpus-dependent graphs (dedup near-dup groups) MUST keep
-    the distributed loop — this helper deliberately has no iteration
-    cap to raise because a bounded graph cannot grow one.
-
-    The collect IS capped though (r14, r13 verdict directive #2): the
-    bounded-graph contract is the caller's invariant, and a caller that
-    breaks it must fail loudly with the contract named, not OOM the
-    driver."""
-    from ..tables import values_dim
-
-    spark = edges.sparkSession
-    rows = (
-        edges.select(
-            F.col(id_a).cast("long").alias("a"),
-            F.col(id_b).cast("long").alias("b"),
-        )
-        .limit(BOUNDED_CC_EDGES + 1)
-        .collect()
-    )
-    if len(rows) > BOUNDED_CC_EDGES:
-        raise ValueError(
-            "bounded_cc_labels: edge list exceeds the bounded control-"
-            f"plane cap ({BOUNDED_CC_EDGES}) — this labeler is only for "
-            "graphs whose node count is corpus-size-independent by "
-            "construction (cells <= geography/eps^2); corpus-dependent "
-            "graphs must use operators.dedup.connected_components"
-        )
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for r in rows:
-        a, b = r["a"], r["b"]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)  # min-label union
-    label = {n: find(n) for n in parent}
-    return values_dim(
-        spark,
-        sorted((int(n), int(c)) for n, c in label.items()),
-        "doc_id bigint, canonical_id bigint",
-    )
-
-
 def cellgrid_assign(
     cells: DataFrame, key_mult: int = 100000, num: int = 12, den: int = 10
 ) -> DataFrame:
@@ -517,29 +443,28 @@ def cellgrid_assign(
     # core rule, cell CC, border attach, noise) is cell-level work on a
     # bounded frame, so it runs driver-side off ONE capped collect and
     # returns a LocalRelation (r13). The previous DataFrame cascade —
-    # 4 checkpoints, ~10 broadcast exchanges, the bounded_cc_labels
-    # collect — cost ~25 scheduler round-trips per run (measured sf0.1:
-    # ~1.7s of the cellgrid flagship's 2.7s warm time was this control
-    # plane, job-sum only 0.97s). The collect is the same bounded class
-    # as bounded_cc_labels' edge collect one level down — and strictly
-    # smaller: cells <= geography/eps^2 rows of three longs, while the
-    # cell EDGE list it previously collected is up to 9x that. All
+    # 4 checkpoints, ~10 broadcast exchanges, a driver collect of the
+    # cell edge list — cost ~25 scheduler round-trips per run (measured
+    # sf0.1: ~1.7s of the cellgrid flagship's 2.7s warm time was this
+    # control plane, job-sum only 0.97s). The collect is a contract-cap
+    # bounded.driver_head (operators/bounded.py) over cells <=
+    # geography/eps^2 rows of three longs, while the cell EDGE list the
+    # cascade collected is up to 9x that. All
     # arithmetic below is integer-exact (Python ints are wider than the
     # previous BIGINT columns, matching the DuckDB oracle's HUGEINT
     # promotion rather than Spark's silent non-ANSI wrap).
     from ..tables import values_dim
 
     spark = cells.sparkSession
-    head = (
+    head = bounded.driver_head(
         cells.select(
             F.col("cx").cast("long").alias("cx"),
             F.col("cy").cast("long").alias("cy"),
             F.col("w").cast("long").alias("w"),
-        )
-        .limit(BOUNDED_CELLS_CAP + 1)
-        .toArrow()
+        ),
+        cap=BOUNDED_CELLS_CAP,
     )
-    if head.num_rows > BOUNDED_CELLS_CAP:
+    if head is None:
         raise ValueError(
             "cellgrid_assign: occupied-cell count exceeds the bounded-"
             f"cells cap ({BOUNDED_CELLS_CAP}) — the eps-grid contract "
@@ -596,33 +521,18 @@ def cellgrid_assign(
     core_set = set(core)
     key = {q: q[0] * key_mult + q[1] for q in core}
 
-    # CC over core-core grid adjacency: min-label union-find, identical
-    # labels to bounded_cc_labels / connected_components (component
-    # minimum of the packed key)
-    parent = {key[q]: key[q] for q in core}
-
-    def find(k: int) -> int:
-        r = k
-        while parent[r] != r:
-            r = parent[r]
-        while parent[k] != r:  # path compression
-            parent[k], k = r, parent[k]
-        return r
-
-    for q in core:
-        for p in neighbors(*q):
-            if p in core_set:
-                ra, rb = find(key[q]), find(key[p])
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)  # min-label union
+    # CC over core-core grid adjacency, labeled with the component
+    # minimum of the packed key (the connected_components labels).
+    # neighbors() includes the cell itself, so every core cell is a node.
+    label = bounded.min_label_components(
+        (key[q], key[p]) for q in core for p in neighbors(*q) if p in core_set
+    )
     rows: list[tuple[int, int, int, int]] = []
     for x, y in cw:
         if (x, y) in core_set:
-            cid = find(key[(x, y)])
+            cid = label[key[(x, y)]]
         else:
-            core_nb = [
-                find(key[p]) for p in neighbors(x, y) if p in core_set
-            ]
+            core_nb = [label[key[p]] for p in neighbors(x, y) if p in core_set]
             cid = min(core_nb) if core_nb else -1  # border else noise
         rows.append((x, y, cw[(x, y)], cid))
     return values_dim(spark, sorted(rows), out_schema)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text_funcs import distinct_tokens, fingerprint, word_jaccard
 from ..functions.vectors import dot, unit
+from . import bounded
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -189,12 +190,6 @@ MINHASH_BANDS = 8
 SIMHASH_BITS = 64
 SIMHASH_CHUNKS = 4
 
-# connected_components small-graph cap: an edge list at or under this
-# many (directed) rows is labeled driver-side in one collect (~3 MB of
-# long pairs — the broadcast-relation size class) instead of running
-# the multi-round distributed loop. Larger graphs take the loop.
-SMALL_GRAPH_EDGES = 200_000
-
 
 def minhash_band_hashes(
     sig_col: str = "sig", n_perm: int = MINHASH_N_PERM, bands: int = MINHASH_BANDS
@@ -331,12 +326,12 @@ def connected_components(
     corpus proved such assumptions wrong once already — prefer the
     adaptive loop unless the bound is structural).
 
-    Small-graph fast path (r13): one limit-bounded count probes the
-    edge list; at or under ``SMALL_GRAPH_EDGES`` rows the labeling runs
-    as ONE capped collect + driver union-find (the broadcast-join
-    device: a bounded driver materialization replacing a multi-round
-    shuffle plan — the cap is ~3 MB of id pairs, far under any
-    broadcast threshold). Each adaptive-loop materialization costs 2-3
+    Small-graph fast path (r13): at or under ``bounded.DRIVER_ROWS``
+    directed edge rows with no null id (``operators/bounded.py``), the
+    labeling runs as ONE capped collect + driver union-find (the
+    broadcast-join device: a bounded driver materialization replacing a
+    multi-round shuffle plan — the cap is ~3 MB of id pairs, far under
+    any broadcast threshold). Each adaptive-loop materialization costs 2-3
     scheduler rounds regardless of graph size, so a small graph paid
     ~10 rounds of pure overhead (measured r13: 4.5 s of
     dedup_duplicate_groups' 4.65 s warm time). Above the cap the
@@ -370,38 +365,25 @@ def connected_components(
         # edge fetch (r13: the previous limit().count() probe executed
         # the whole upstream pair join as a separate job, and the
         # follow-up collect() paid per-Row object conversion — together
-        # ~0.7s of dedup_duplicate_groups' warm time at sf0.1). The
-        # limit bounds the driver transfer at ~3 MB of long pairs
-        # regardless of graph size; over the cap the partial result is
-        # discarded and the distributed loop below runs as before.
-        head = edges.limit(SMALL_GRAPH_EDGES + 1).toArrow()
-        if head.num_rows <= SMALL_GRAPH_EDGES:
-            parent: dict[int, int] = {}
-
-            def find(x: int) -> int:
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for a, b in zip(
-                head.column("s").to_pylist(), head.column("d").to_pylist()
-            ):
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)  # min-label union
+        # ~0.7s of dedup_duplicate_groups' warm time at sf0.1). Over the
+        # cap, or with a null id (the loop's null semantics stay
+        # authoritative, as in the Lloyd and tree fast paths), the
+        # distributed loop below runs as before.
+        head = bounded.driver_head(edges)
+        if head is not None and not (
+            head.column("s").null_count or head.column("d").null_count
+        ):
             import pandas as pd
 
-            nodes = sorted(parent)
+            label = bounded.min_label_components(
+                zip(head.column("s").to_pylist(), head.column("d").to_pylist())
+            )
+            nodes = sorted(label)
             out = pd.DataFrame(
                 {
                     "doc_id": pd.Series(nodes, dtype="int64"),
                     "canonical_id": pd.Series(
-                        [find(n) for n in nodes], dtype="int64"
+                        [label[n] for n in nodes], dtype="int64"
                     ),
                 }
             )

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import bounded
+
 _B = "__rk_bucket"
 _LOCAL = "__rk_local"
 _OFF = "__rk_offset"
@@ -56,15 +58,19 @@ MAX_BUCKETS = 1_000_000  # loud failure beats a silent driver OOM
 def _offset_dim(bucketed: DataFrame, agg: Column):
     """Collect per-bucket totals (bounded: bucket-key cardinality),
     prefix-sum driver-side, return (broadcast offsets frame, grand
-    total). One bounded control-plane job; the caller's plan joins a
+    total). One bounded control-plane job through bounded.driver_head
+    (at most MAX_BUCKETS + 1 rows cross); the caller's plan joins a
     LocalTableScan literal dim."""
-    rows = bucketed.groupBy(_B).agg(agg.cast("long").alias("__bn")).collect()
-    if len(rows) > MAX_BUCKETS:
+    head = bounded.driver_head(
+        bucketed.groupBy(_B).agg(agg.cast("long").alias("__bn")),
+        cap=MAX_BUCKETS,
+    )
+    if head is None:
         raise ValueError(
-            f"bucketed rank: {len(rows)} buckets exceeds MAX_BUCKETS="
-            f"{MAX_BUCKETS}; pick a coarser bucket key"
+            f"bucketed rank: more buckets than MAX_BUCKETS={MAX_BUCKETS}; "
+            "pick a coarser bucket key"
         )
-    if any(r[_B] is None for r in rows):
+    if head.column(_B).null_count:
         # A NULL bucket key would crash the Python sort below on mixed
         # types, and — worse — silently drop every null-bucket row at the
         # equi-join in the caller. The naive global window the device
@@ -72,17 +78,20 @@ def _offset_dim(bucketed: DataFrame, agg: Column):
         # drop is a wrong answer, not a degenerate one. Fail loudly and
         # tell the caller to pre-coalesce (e.g. bucket over
         # coalesce(value, sentinel) ordered like the window's null
-        # ordering).
+        # ordering). (__bn itself may be null: a sum over null values.)
         raise ValueError(
             "bucketed rank: bucket key is NULL for some rows; coalesce "
             "the bucket expression to a sentinel that sorts like the "
             "window's null ordering (NULLS FIRST -> lowest bucket)"
         )
-    rows.sort(key=lambda r: r[_B])
+    rows = sorted(
+        zip(head.column(_B).to_pylist(), head.column("__bn").to_pylist()),
+        key=lambda r: r[0],
+    )
     offsets, acc = [], 0
-    for r in rows:
-        offsets.append((r[_B], acc))
-        acc += r["__bn"] or 0
+    for b, bn in rows:
+        offsets.append((b, acc))
+        acc += bn or 0
     spark = bucketed.sparkSession
     btype = bucketed.schema[_B].dataType.simpleString()
     dim = spark.createDataFrame(offsets, f"{_B} {btype}, {_OFF} long")

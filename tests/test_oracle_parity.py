@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from bigdatanycdiseasesurveillance_spark.operators import bounded
 from bigdatanycdiseasesurveillance_spark.registry import all_specs
 
 from .helpers import assert_parity, duck_con
@@ -23,9 +24,29 @@ def con(sf_dir):
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_oracle_parity(spark, sf_dir, con, name):
+def test_oracle_parity(spark, sf_dir, con, name, monkeypatch):
+    """When the run took a default-cap driver fast path
+    (operators/bounded.py), the query is run again with every such path
+    forced onto its distributed branch, and that run must match the
+    oracle too: the test data is small, so otherwise only the driver
+    branch would ever be oracle-checked."""
     spec = SPECS[name]
+    driver_branches = []
+    driver_head = bounded.driver_head
+
+    def recording_driver_head(df, cap=None):
+        head = driver_head(df, cap)
+        if cap is None and head is not None:
+            driver_branches.append(head.num_rows)
+        return head
+
+    monkeypatch.setattr(bounded, "driver_head", recording_driver_head)
     assert_parity(spec.fn(spark, sf_dir), spec.oracle, con, name)
+    if driver_branches:
+        monkeypatch.setattr(bounded, "DRIVER_ROWS", -1)
+        assert_parity(
+            spec.fn(spark, sf_dir), spec.oracle, con, f"{name} [distributed]"
+        )
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)

@@ -1,6 +1,6 @@
 """Round-13 optimization internals: the hybrid connected-components
-fast path and the bounded-graph union-find labeler must be
-label-identical to the distributed min-label loop they bypass."""
+fast path must be label-identical to the distributed min-label loop it
+bypasses."""
 
 from __future__ import annotations
 
@@ -22,33 +22,33 @@ _PAIRS = (
 def test_cc_fast_path_equals_distributed_loop(spark, monkeypatch):
     """The capped-collect union-find must produce exactly the labels of
     the distributed propagate/compress loop on the same edges."""
+    from bigdatanycdiseasesurveillance_spark.operators import bounded
     from bigdatanycdiseasesurveillance_spark.operators import dedup as D
 
     pairs = spark.createDataFrame(_PAIRS, "id_a long, id_b long")
     fast = _labels(D.connected_components(pairs))  # under the cap
 
-    monkeypatch.setattr(D, "SMALL_GRAPH_EDGES", -1)  # force the loop
+    monkeypatch.setattr(bounded, "DRIVER_ROWS", -1)  # force the loop
     slow = _labels(D.connected_components(pairs))
     assert fast == slow
     # canonical = component minimum
     assert fast[8] == 0 and fast[22] == 20 and fast[31] == 30
 
 
-def test_bounded_cc_labels_equals_connected_components(spark):
-    """clustering.bounded_cc_labels (the cell-graph labeler) agrees
-    with operators.dedup.connected_components on identical edges,
-    including self-edges (core cells always carry one)."""
+def test_cc_fast_path_null_id_falls_back(spark, monkeypatch):
+    """A null id under the cap must take the distributed loop (its null
+    semantics stay authoritative) instead of crashing the driver
+    union-find on a None-vs-int comparison."""
+    from bigdatanycdiseasesurveillance_spark.operators import bounded
     from bigdatanycdiseasesurveillance_spark.operators import dedup as D
-    from bigdatanycdiseasesurveillance_spark.operators.clustering import (
-        bounded_cc_labels,
-    )
 
     pairs = spark.createDataFrame(
-        _PAIRS + [(n, n) for n in (0, 20, 30, 40)], "id_a long, id_b long"
+        [(1, 2), (2, None), (5, 6)], "id_a long, id_b long"
     )
-    assert _labels(bounded_cc_labels(pairs)) == _labels(
-        D.connected_components(pairs)
-    )
+    fast = sorted(map(tuple, D.connected_components(pairs).collect()), key=str)
+    monkeypatch.setattr(bounded, "DRIVER_ROWS", -1)  # force the loop
+    slow = sorted(map(tuple, D.connected_components(pairs).collect()), key=str)
+    assert fast == slow and (5, 5) in fast
 
 
 def test_cc_fast_path_empty_edges(spark):

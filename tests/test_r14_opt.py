@@ -22,6 +22,7 @@ def _pts_2d(spark, n=200):
 
 
 def test_lloyd_2d_fast_path_equals_distributed(spark, monkeypatch):
+    from bigdatanycdiseasesurveillance_spark.operators import bounded
     from bigdatanycdiseasesurveillance_spark.operators import clustering as C
 
     pts = _pts_2d(spark)
@@ -29,7 +30,7 @@ def test_lloyd_2d_fast_path_equals_distributed(spark, monkeypatch):
         r["vec_id"]: r["cluster_id"]
         for r in C.lloyd_kmeans_2d(pts, k=5, iters=8).collect()
     }
-    monkeypatch.setattr(C, "SMALL_KMEANS_POINTS", -1)  # force the loop
+    monkeypatch.setattr(bounded, "DRIVER_ROWS", -1)  # force the loop
     slow = {
         r["vec_id"]: r["cluster_id"]
         for r in C.lloyd_kmeans_2d(pts, k=5, iters=8).collect()
@@ -38,6 +39,7 @@ def test_lloyd_2d_fast_path_equals_distributed(spark, monkeypatch):
 
 
 def test_lloyd_nd_fast_path_equals_distributed(spark, monkeypatch):
+    from bigdatanycdiseasesurveillance_spark.operators import bounded
     from bigdatanycdiseasesurveillance_spark.operators import clustering as C
 
     base = _pts_2d(spark, n=150)
@@ -51,7 +53,7 @@ def test_lloyd_nd_fast_path_equals_distributed(spark, monkeypatch):
     dims = ["e0", "e1", "e2", "e3"]
     fa, fc = C.lloyd_kmeans_nd(pts, dims, k=4, iters=4, id_col="pid")
     fast = {r["pid"]: r["cluster_id"] for r in fa.collect()}
-    monkeypatch.setattr(C, "SMALL_KMEANS_POINTS", -1)
+    monkeypatch.setattr(bounded, "DRIVER_ROWS", -1)
     sa, sc = C.lloyd_kmeans_nd(pts, dims, k=4, iters=4, id_col="pid")
     slow = {r["pid"]: r["cluster_id"] for r in sa.collect()}
     assert fast == slow and len(fast) == 150
@@ -107,25 +109,34 @@ def test_bounded_driver_collects_raise_over_cap(spark, monkeypatch):
     with pytest.raises(ValueError, match="bounded-cells cap"):
         C.cellgrid_assign(cells)
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(5)], "id_a long, id_b long"
-    )
-    monkeypatch.setattr(C, "BOUNDED_CC_EDGES", 4)
-    with pytest.raises(ValueError, match="bounded control-plane cap"):
-        C.bounded_cc_labels(edges)
+
+def test_driver_head_contract(spark):
+    """bounded.driver_head returns the whole frame as a pyarrow Table
+    at exactly `cap` rows, None at `cap + 1`, and an empty table for an
+    empty frame."""
+    from bigdatanycdiseasesurveillance_spark.operators import bounded
+
+    at_cap = bounded.driver_head(spark.range(5), cap=5)
+    assert at_cap.num_rows == 5
+    assert sorted(at_cap.column("id").to_pylist()) == [0, 1, 2, 3, 4]
+    assert bounded.driver_head(spark.range(6), cap=5) is None
+    empty = bounded.driver_head(spark.range(0))
+    assert empty is not None and empty.num_rows == 0
+    assert empty.column_names == ["id"]
 
 
 def test_tree_rollup_fast_path_equals_distributed(spark, sf_dir, monkeypatch):
     """tree_subtree_rollup's capped driver rollup must match the
     level-synchronous distributed loop row for row (exact integer
     arithmetic, including the missing-parent drop semantics)."""
+    from bigdatanycdiseasesurveillance_spark.operators import bounded
     from bigdatanycdiseasesurveillance_spark.queries import graph_q as G
 
     fast = {
         r["user_id"]: (r["n_subtree"], r["subtree_cents"])
         for r in G.tree_subtree_rollup(spark, sf_dir).collect()
     }
-    monkeypatch.setattr(G, "TREE_FAST_PATH_NODES", -1)  # force the loop
+    monkeypatch.setattr(bounded, "DRIVER_ROWS", -1)  # force the loop
     slow = {
         r["user_id"]: (r["n_subtree"], r["subtree_cents"])
         for r in G.tree_subtree_rollup(spark, sf_dir).collect()
